@@ -4,5 +4,4 @@ from hmpps_digital_prison_reporting_glue_poc_spark.operators.cdc import (  # noq
     latest_event_per_key,
     first_event_per_key,
     merge_cdc,
-    apply_to_curated,
 )

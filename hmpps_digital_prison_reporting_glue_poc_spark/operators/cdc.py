@@ -22,8 +22,6 @@ collect anywhere.
 
 from __future__ import annotations
 
-from typing import Callable
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
@@ -181,7 +179,7 @@ def cdc_upsert_frame(
 ) -> DataFrame:
     """Incremental-merge form: the per-key net change of a batch — final row
     image plus ``__is_delete`` — ready for sources.merge_write / Delta MERGE.
-    This is the shape a streaming foreachBatch uses (streaming/cdc_stream.py).
+    This is the last-writer-wins net of plans.pipeline.run_structured.
     """
     finals = latest_event_per_key(mapped_events, pk, order_col)
     return finals.withColumn("__is_delete", F.col("event_type") == F.lit("D"))
@@ -311,14 +309,6 @@ def _chain_fold(
         *pk, F.col("__is_base").desc(), F.col(order_col).asc_nulls_last()
     )
     return arranged.mapInPandas(fold_partitions, schema=out_schema)
-
-
-def apply_to_curated(
-    df: DataFrame, transform: Callable[[DataFrame], DataFrame] | None = None
-) -> DataFrame:
-    """Stage 3 (reference src/apply_to_curated.py:153-161): identity today,
-    pluggable business-rule transform tomorrow."""
-    return transform(df) if transform else df
 
 
 def scd2_history(

@@ -8,11 +8,18 @@ Stage map (reference -> here):
 3. curated    apply_to_curated.start()        -> run_curated()
 4. domain     apply_to_domains.start()        -> run_domains() (plans.domains)
 
+One apply path: ``run_pipeline`` takes one batch of raw CDC events through
+the four stages, and ``run_pipeline_streaming`` calls that same function
+on every micro-batch, so hash-chain validation and quarantine hold on
+both.
+
 Differences from the reference (its own README lists these as flaws,
 reference README.md:48-58):
 - the event log is appended partition-by-partition, not rewritten;
-- the structured merge is shuffle-based (operators.cdc.merge_cdc) and the
-  write is the incremental merge sink, not a full-table overwrite;
+- each table's batch folds to one net change per key (last-writer-wins,
+  or the hash-chain fold) and ``sources.io.merge_write`` merges it into
+  structured and then curated — only touched partitions are rewritten,
+  never the whole table;
 - per-table work is derived from the event log with one distinct scan, and
   everything downstream of it is per-table DataFrame lineage — no driver
   collect of data rows (only the table-name list, which is metadata-scale).
@@ -31,16 +38,19 @@ from hmpps_digital_prison_reporting_glue_poc_spark.functions.cdc_functions impor
     format_table_name,
 )
 from hmpps_digital_prison_reporting_glue_poc_spark.operators.cdc import (
-    apply_to_curated,
+    _chain_fold,
+    cdc_upsert_frame,
     ingest_events,
     map_events_to_target,
-    merge_cdc,
 )
 from hmpps_digital_prison_reporting_glue_poc_spark.plans.domains import (
     run_domains,
 )
+from hmpps_digital_prison_reporting_glue_poc_spark.sources import io
 from hmpps_digital_prison_reporting_glue_poc_spark.sources.io import (
+    cdc_json_reader,
     read_cdc_json,
+    split_corrupt,
     write_partitioned_parquet,
 )
 
@@ -60,21 +70,21 @@ class PipelineConfig:
 
 
 def run_landing(
-    spark: SparkSession, cfg: PipelineConfig, catalog: Catalog
+    spark: SparkSession, cfg: PipelineConfig, catalog: Catalog,
+    raw: DataFrame | None = None,
 ) -> DataFrame:
-    """Stage 1 (E1): raw JSON -> hashed, date-partitioned event log.
-    Append-only — the event log is immutable history; partition pruning on
-    part_date serves the downstream incremental reads."""
+    """Stage 1 (E1): raw CDC events -> hashed, date-partitioned event log.
+    ``raw`` is one batch read with ``cdc_json_reader`` (a micro-batch on
+    the stream); ``None`` reads ``cfg.raw_path``. With ``cfg.quarantine``
+    malformed lines append to <event_log_path>_quarantine. Append-only —
+    the event log is immutable history; partition pruning on part_date
+    serves the downstream incremental reads."""
     spec = catalog.get(cfg.event_log_table)
+    if raw is None:
+        raw = read_cdc_json(spark, cfg.raw_path, cfg.row_schema, cfg.quarantine)
     if cfg.quarantine:
-        from hmpps_digital_prison_reporting_glue_poc_spark.sources.io import split_corrupt
-
-        raw, corrupt = split_corrupt(
-            read_cdc_json(spark, cfg.raw_path, cfg.row_schema, quarantine=True)
-        )
+        raw, corrupt = split_corrupt(raw)
         corrupt.write.mode("append").parquet(spec.path + "_quarantine")
-    else:
-        raw = read_cdc_json(spark, cfg.raw_path, cfg.row_schema)
     log = ingest_events(raw)
     write_partitioned_parquet(log, spec.path, ["part_date"], mode="append")
     return log
@@ -83,11 +93,18 @@ def run_landing(
 def run_structured(
     spark: SparkSession, cfg: PipelineConfig, catalog: Catalog,
     event_log: DataFrame | None = None,
-) -> list[str]:
-    """Stage 2 (E2): event log -> per-table CDC merge into structured
-    tables. Returns the list of touched logical table names (drives stage 4
-    ACTIVE filtering, replacing the reference's hard-coded
-    KINESIS_EVENTS_TABLES)."""
+) -> dict[str, DataFrame]:
+    """Stage 2 (E2): event log -> per-table net change, merged into the
+    structured tables. Returns {touched logical table name: net frame}
+    (target columns plus ``__is_delete``); the names drive stage 4 ACTIVE
+    filtering, replacing the reference's hard-coded KINESIS_EVENTS_TABLES.
+
+    Each net is computed once, as an eager local checkpoint: structured
+    and curated merge the same frame over a short plan, and the hash-chain
+    fold, which reads the live rows of the touched keys from the target
+    this merge replaces, is never re-run after the swap (it would fold
+    against the new table or miss its deleted files). ``run_pipeline``
+    releases the checkpoints."""
     log = (
         event_log
         if event_log is not None
@@ -96,7 +113,7 @@ def run_structured(
     tables = [
         r[0] for r in log.select(F.lower("table")).distinct().collect()
     ]  # metadata-scale collect (table names only)
-    touched: list[str] = []
+    nets: dict[str, DataFrame] = {}
     for qualified in tables:
         name = format_table_name(qualified)
         if name not in cfg.tables:
@@ -104,53 +121,71 @@ def run_structured(
         target_name, _ = cfg.tables[name]
         spec = catalog.get(target_name)
         target = catalog.read(spark, target_name)
-        events = log.filter(F.lower("table") == qualified.lower())
+        events = log.filter(F.lower("table") == qualified)
         mapped = map_events_to_target(events, target.schema)
-        merged = merge_cdc(
-            target, mapped, pk=spec.pk,
-            validate_hash_chain=cfg.validate_hash_chain,
+        if cfg.validate_hash_chain:
+            net = _chain_fold(
+                target, mapped, spec.pk, "admin_gg_pos", target.columns
+            ).withColumn("__is_delete", F.col("__action") == "D")
+        else:
+            net = cdc_upsert_frame(mapped, spec.pk)
+        net = net.select(*target.columns, "__is_delete").localCheckpoint(
+            eager=True
         )
-        # Self-referencing read->write: break lineage before overwrite.
-        merged.localCheckpoint(eager=True).write.mode("overwrite").format(
-            spec.format
-        ).save(spec.path)
-        touched.append(name)
-    return touched
+        io.merge_write(
+            spark, net, spec.path, spec.pk, delete_col="__is_delete",
+            partition_by=spec.partition_by or None,
+        )
+        nets[name] = net
+    return nets
 
 
 def run_curated(
     spark: SparkSession, cfg: PipelineConfig, catalog: Catalog,
-    tables: list[str] | None = None,
-    transform=None,
+    nets: dict[str, DataFrame],
 ) -> list[str]:
-    """Stage 3 (E3 bridge): structured -> curated, pluggable transform
-    (identity today, reference src/apply_to_curated.py:153-161)."""
-    done = []
-    for name, (target_name, curated_name) in cfg.tables.items():
-        if tables is not None and name not in tables:
-            continue
-        df = apply_to_curated(catalog.read(spark, target_name), transform)
-        catalog.write(df, curated_name)
-        done.append(name)
-    return done
+    """Stage 3 (E3 bridge): structured -> curated. Curated is the identity
+    image of structured (reference src/apply_to_curated.py:153-161) and
+    starts in step with it, so merging each table's net change from
+    ``run_structured`` keeps the two equal without copying the table."""
+    for name, net in nets.items():
+        target_name, curated_name = cfg.tables[name]
+        spec = catalog.get(curated_name)
+        io.merge_write(
+            spark, net, spec.path, spec.pk or catalog.get(target_name).pk,
+            delete_col="__is_delete", partition_by=spec.partition_by or None,
+        )
+    return list(nets)
 
 
 def run_pipeline(
     spark: SparkSession, cfg: PipelineConfig, catalog: Catalog,
     defs_df: DataFrame | None = None,
     process_id: int | None = None,
+    raw: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """All four stages. Returns the materialised domain frames."""
-    log = run_landing(spark, cfg, catalog)
-    touched = run_structured(spark, cfg, catalog, event_log=log)
-    run_curated(spark, cfg, catalog, tables=touched)
-    if defs_df is None:
-        return {}
-    curated_touched = [cfg.tables[t][1] for t in touched]
-    return run_domains(
-        spark, defs_df, curated_touched, catalog,
-        process_id=process_id, write=True,
-    )
+    """All four stages over one batch of raw events (``raw``, or
+    ``cfg.raw_path`` when None). Returns the materialised domain frames.
+    What it caches on the way (the quarantine split, the nets' local
+    checkpoints) is released before it returns."""
+    if raw is None:
+        raw = read_cdc_json(spark, cfg.raw_path, cfg.row_schema, cfg.quarantine)
+    nets: dict[str, DataFrame] = {}
+    try:
+        log = run_landing(spark, cfg, catalog, raw)
+        nets = run_structured(spark, cfg, catalog, event_log=log)
+        run_curated(spark, cfg, catalog, nets)
+        if defs_df is None or not nets:
+            return {}
+        curated_touched = [cfg.tables[t][1] for t in nets]
+        return run_domains(
+            spark, defs_df, curated_touched, catalog,
+            process_id=process_id, write=True,
+        )
+    finally:
+        raw.unpersist()
+        for net in nets.values():  # a local checkpoint's plan is its RDD
+            net._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def run_pipeline_streaming(
@@ -161,95 +196,40 @@ def run_pipeline_streaming(
     max_files_per_trigger: int = 1,
     on_batch=None,
 ) -> int:
-    """The same four stages as ``run_pipeline``, driven by Structured
-    Streaming: ``readStream`` over the raw CDC JSON directory, and EVERY
-    micro-batch runs landing-append -> per-table incremental merge ->
-    curated -> domain refresh inside ``foreachBatch`` — the micro-batch
-    design the reference's README lists as TODO (reference README.md:24-25;
-    Kinesis trigger stubs src/apply_change_log_to_delta.py:521-528).
+    """``run_pipeline`` driven by Structured Streaming: ``readStream`` over
+    the raw CDC JSON directory (same reader schema and corrupt-record
+    options as the batch read), and EVERY micro-batch runs ``run_pipeline``
+    inside ``foreachBatch`` — the micro-batch design the reference's README
+    lists as TODO (reference README.md:24-25; Kinesis trigger stubs
+    src/apply_change_log_to_delta.py:521-528).
 
     Identical final state to the batch pipeline (pinned by
-    tests/test_pipeline_stream_e2e.py): within a batch the GoldenGate
-    ``pos`` order folds to one net image per key (``cdc_upsert_frame``),
-    across batches the incremental ``merge_write`` applies each batch's
-    net changes in source order — the same last-writer-wins algebra the
-    batch path computes in one fold. Domains refresh per batch, so the
-    domain tables are continuously correct, not only at drain time.
+    tests/test_pipeline_stream_e2e.py): each micro-batch folds to one net
+    change per key and merges it incrementally, so applying the batches in
+    source order reaches the state one fold over all events reaches.
+    Domains refresh per batch, so the domain tables are continuously
+    correct, not only at drain time.
 
     Runs with ``availableNow`` + ``maxFilesPerTrigger`` (drain everything
     currently in the directory, in bounded micro-batches) and blocks until
     drained; a continuous deployment would drop the trigger and keep the
     same checkpoint. Returns the number of non-empty micro-batches.
     """
-    from hmpps_digital_prison_reporting_glue_poc_spark.operators.cdc import cdc_upsert_frame
-    from hmpps_digital_prison_reporting_glue_poc_spark.sources.io import (
-        cdc_envelope_schema,
-        merge_write,
-    )
-
-    log_spec = catalog.get(cfg.event_log_table)
-    target_schemas = {
-        name: catalog.read(spark, target_name).schema
-        for name, (target_name, _) in cfg.tables.items()
-    }
-    n_batches = {"n": 0}
+    n_batches = 0
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal n_batches
         if batch_df.isEmpty():
             return
-        n_batches["n"] += 1
-        # stage 1: landing append (immutable event log, date-partitioned)
-        log = ingest_events(batch_df)
-        write_partitioned_parquet(
-            log, log_spec.path, ["part_date"], mode="append"
+        n_batches += 1
+        run_pipeline(
+            spark, cfg, catalog, defs_df, process_id=process_id, raw=batch_df
         )
-        # stage 2: per-table incremental merge of the batch's net changes
-        tables = [
-            r[0] for r in log.select(F.lower("table")).distinct().collect()
-        ]  # metadata-scale (table names in this batch)
-        touched = []
-        for qualified in tables:
-            name = format_table_name(qualified)
-            if name not in cfg.tables:
-                continue
-            target_name, _ = cfg.tables[name]
-            spec = catalog.get(target_name)
-            events = log.filter(F.lower("table") == qualified.lower())
-            mapped = map_events_to_target(events, target_schemas[name])
-            net = cdc_upsert_frame(mapped, spec.pk)
-            updates = net.select(
-                *[f.name for f in target_schemas[name].fields], "__is_delete"
-            )
-            merge_write(
-                spark, updates, spec.path, spec.pk, delete_col="__is_delete",
-                partition_by=spec.partition_by or None,
-            )
-            touched.append(name)
-            # stage 3, INCREMENTALLY: curated is the identity image of
-            # structured (apply_to_curated's default), so merging the SAME
-            # net updates into curated yields the same state as the batch
-            # path's full copy — without rewriting the whole curated table
-            # every micro-batch (round-6 streaming stress: the full copy
-            # made per-batch cost grow with the table, the streaming
-            # analogue of the reference's full-overwrite flaw).
-            curated_name = cfg.tables[name][1]
-            cspec = catalog.get(curated_name)
-            merge_write(
-                spark, updates, cspec.path, cspec.pk or spec.pk,
-                delete_col="__is_delete",
-                partition_by=cspec.partition_by or None,
-            )
-        if defs_df is not None and touched:
-            curated_touched = [cfg.tables[t][1] for t in touched]
-            run_domains(
-                spark, defs_df, curated_touched, catalog,
-                process_id=process_id, write=True,
-            )
         if on_batch is not None:  # observability hook (stream stress)
             on_batch(batch_id)
 
     raw = (
-        spark.readStream.schema(cdc_envelope_schema(cfg.row_schema))
+        cdc_json_reader(spark.readStream, cfg.row_schema, cfg.quarantine)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(cfg.raw_path)
     )
@@ -261,4 +241,4 @@ def run_pipeline_streaming(
         .start()
     )
     query.awaitTermination()
-    return n_batches["n"]
+    return n_batches

@@ -10,7 +10,8 @@ Spark-first replacements for the reference's Glue DynamicFrame plumbing:
   src/apply_to_domains.py:213-228) — the reference full-overwrites Delta per
   batch (its own README flags the latency, reference README.md:56); here the
   sink is incremental: Delta MERGE when delta-spark is importable, else a
-  partition-scoped dynamic overwrite so only touched partitions rewrite.
+  partition-scoped merge that writes each touched partition once and
+  swaps it in by directory rename.
 
 Schema-first reads: the CDC JSON is read with an explicit schema (no
 inference pass over 100 TB of JSON), which also pins before/after struct
@@ -53,30 +54,32 @@ def cdc_envelope_schema(row_schema: T.StructType) -> T.StructType:
     )
 
 
+def cdc_json_reader(reader, row_schema: T.StructType, quarantine: bool = False):
+    """Give a ``spark.read`` or ``spark.readStream`` reader the CDC envelope
+    schema; ``quarantine=True`` adds a ``_corrupt_record`` column (PERMISSIVE
+    mode): malformed lines land there with every schema field null, instead
+    of silently becoming all-null rows — use ``split_corrupt`` to fork the
+    frame into clean/quarantine frames. At 100 TB a poison line must not
+    kill the batch, and must not vanish either."""
+    schema = cdc_envelope_schema(row_schema)
+    if not quarantine:
+        return reader.schema(schema)
+    schema = T.StructType(
+        list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
+    )
+    return (
+        reader.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+    )
+
+
 def read_cdc_json(
     spark: SparkSession, path: str, row_schema: T.StructType,
     quarantine: bool = False,
 ) -> DataFrame:
-    """S1: schema-first JSON read of raw CDC events.
-
-    ``quarantine=True`` adds a ``_corrupt_record`` column (PERMISSIVE mode):
-    malformed lines land there with every schema field null, instead of
-    silently becoming all-null rows — use ``split_corrupt`` to fork the
-    stream into clean/quarantine frames. At 100 TB a poison line must not
-    kill the batch, and must not vanish either."""
-    schema = cdc_envelope_schema(row_schema)
-    if quarantine:
-        schema = T.StructType(
-            list(schema.fields)
-            + [T.StructField("_corrupt_record", T.StringType())]
-        )
-        return (
-            spark.read.schema(schema)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt_record")
-            .json(path)
-        )
-    return spark.read.schema(schema).json(path)
+    """S1: schema-first JSON read of raw CDC events (``cdc_json_reader``)."""
+    return cdc_json_reader(spark.read, row_schema, quarantine).json(path)
 
 
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -84,7 +87,8 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     from pyspark.sql import functions as F
 
     # Caching is required by Spark for referencing _corrupt_record in a
-    # filter (see SPARK-21610); the frame is one batch of raw events.
+    # filter (see SPARK-21610); the frame is one batch of raw events, and
+    # ``df.unpersist()`` releases it (run_pipeline does, per batch).
     cached = df.cache()
     clean = cached.filter(F.col("_corrupt_record").isNull()).drop(
         "_corrupt_record"
@@ -139,15 +143,11 @@ def merge_write(
     |updates| + |touched files|, not |target|.
 
     Parquet fallback, ``partition_by`` given (the scale path): the merge is
-    PARTITION-SCOPED — touched partition values are derived from the
-    updates (distinct over the partition columns, metadata-scale), only
-    those partitions of the target are read (static partition pruning via
-    a literal filter), and the merged result is written back with dynamic
-    partition overwrite, so untouched partition files are never read,
-    rewritten, or moved. Runtime scales with |updates| + |touched
-    partitions|, not |target| (BASELINE.md's bar). A touched partition
-    whose rows are ALL deleted is dropped explicitly (dynamic overwrite
-    only replaces partitions present in the result).
+    PARTITION-SCOPED — only the partitions the updates touch are read, and
+    each is replaced by renaming its merged copy into place
+    (``_merge_write_partitioned``). Untouched partition files are never
+    read, rewritten, or moved. Runtime scales with |updates| + |touched
+    partitions|, not |target| (BASELINE.md's bar).
 
     Parquet fallback without ``partition_by``: read target, anti-join out
     updated keys, union the new images, full rewrite via a non-destructive
@@ -179,25 +179,17 @@ def merge_write(
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    exists = fs.exists(jpath)
     if delete_col is not None:
         live = updates.filter(~updates[delete_col]).drop(delete_col)
     else:
         live = updates
 
     if partition_by:
-        if exists:
-            _merge_write_partitioned(
-                spark, updates, live, path, pk, partition_by, fs
-            )
-        else:  # first write: lay down the partitioned layout directly
-            live.write.mode("overwrite").partitionBy(*partition_by).parquet(
-                path
-            )
+        _merge_write_partitioned(spark, updates, live, path, pk, partition_by, fs)
         return
+    exists = fs.exists(jpath)
     if exists:
         target = spark.read.parquet(path)
-    if exists:
         untouched = target.join(updates.select(*pk).distinct(), on=pk, how="left_anti")
         # Schema evolution (reference S8: Delta mergeSchema on domain
         # writes, src/apply_to_domains.py:223-224): new columns on either
@@ -230,95 +222,79 @@ def _merge_write_partitioned(
 ) -> None:
     """Partition-scoped parquet merge (the fallback's scale path).
 
-    1. Distinct partition tuples of the updates — metadata-scale collect
+    1. Distinct partition values of the updates — metadata-scale collect
        (one row per touched partition, same driver budget as a Delta
-       commit's file listing).
-    2. Literal IN filter on the partition columns → the target scan
-       statically prunes to touched partition directories only
-       (``.explain`` shows the pruned ``PartitionFilters``).
-    3. Anti-join out updated keys within the touched slice, union the
-       live images, write back under
-       ``partitionOverwriteMode=dynamic`` — only partitions present in
-       the result are replaced; untouched partition files are never
-       read, rewritten, or moved (pytest pins byte-identical files).
-    4. Touched partitions with zero surviving rows (all keys deleted)
-       are removed explicitly — dynamic overwrite cannot drop a
-       partition it writes no rows for.
-    """
-    from functools import reduce
+       commit's file listing) — named as Spark's writer names partition
+       directories (``ExternalCatalogUtils.getPartitionPathString`` over
+       the value cast to string, so ``/``, ``:``, ``=`` escape and NULL is
+       ``__HIVE_DEFAULT_PARTITION__``).
+    2. Only the touched directories that exist are read, with the updates'
+       schema (no schema-inference job, no whole-table listing; a column
+       only the target's files carry is not read back).
+    3. Anti-join out updated keys within that slice, union the live
+       images, and write the merged slice ONCE to a sibling temp dir,
+       clustered by the partition columns (a few files per partition).
+    4. Per touched partition: move the old directory aside, rename the
+       new one in; a partition with no surviving rows is simply not
+       renamed back. The old directories are deleted after every
+       partition is swapped.
 
+    A failure before step 4 leaves the target untouched; the stale temp
+    dir is cleared by the next merge's write. A crash between a
+    partition's two renames leaves its old directory under
+    ``<temp>/_old``, which that write also clears: recover it first.
+    Untouched partitions are never read, rewritten, or moved (pytest pins
+    byte-identical files).
+    """
     from pyspark.sql import functions as F
 
-    touched = [tuple(r) for r in updates.select(*partition_by).distinct().collect()]
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    catalog_utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    values = updates.select(*[F.col(c).cast("string") for c in partition_by])
+    touched = sorted({
+        "/".join(
+            catalog_utils.getPartitionPathString(c, v)
+            for c, v in zip(partition_by, row)
+        )
+        for row in values.distinct().collect()
+    })
     if not touched:
         return
-    # A NULL partition value must still select the
-    # __HIVE_DEFAULT_PARTITION__ slice — plain == would drop its
-    # pre-existing rows while dynamic overwrite rewrites the partition.
-    # isNull (not eqNullSafe(lit(None))): a VOID-typed literal is
-    # rejected by partition pruning.
-    def _part_eq(c, v):
-        return F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-
-    part_filter = reduce(
-        lambda a, b: a | b,
-        (
-            reduce(
-                lambda x, y: x & y,
-                (_part_eq(c, v) for c, v in zip(partition_by, vals)),
-            )
-            for vals in touched
-        ),
-    )
-    target_slice = spark.read.parquet(path).filter(part_filter)
-    untouched_rows = target_slice.join(
-        updates.select(*pk).distinct(), on=pk, how="left_anti"
-    )
-    result = untouched_rows.unionByName(live, allowMissingColumns=True)
-
-    # Spark refuses to overwrite a path its own plan reads from, so the
-    # merged slice materializes to a sibling temp dir first (sized by the
-    # touched partitions, not the target), then replays into the target
-    # under dynamic overwrite. Failure before the dynamic overwrite
-    # leaves the target untouched.
-    jvm = spark._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".__merge_tmp__")
-    if fs.exists(tmp):
-        fs.delete(tmp, True)
-    result.write.mode("overwrite").partitionBy(*partition_by).parquet(
-        tmp.toString()
-    )
-    # Explicit schema on the read-back: partition-type inference would
-    # yield VOID for an all-null partition slice (write rejects it), and
-    # fails outright when every touched row was deleted (empty tmp dir).
-    staged = spark.read.schema(result.schema).parquet(tmp.toString())
-
-    # Writer-level option, NOT spark.conf.set: inside foreachBatch the
-    # session is a clone and a conf set on the wrong one silently falls
-    # back to static overwrite (wiping untouched partitions).
-    (
-        staged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
-
-    # drop touched partitions that ended up empty (all rows deleted)
-    remaining = {
-        tuple(r)
-        for r in staged.select(*partition_by).distinct().collect()
-    }
-    for vals in touched:
-        if vals in remaining:
-            continue
-        subdir = "/".join(
-            f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
-            for c, v in zip(partition_by, vals)
+    root = path.rstrip("/")
+    existing = {rel for rel in touched if fs.exists(Path(f"{root}/{rel}"))}
+    result = live
+    if existing:
+        target_slice = (
+            spark.read.schema(live.schema).option("basePath", root)
+            .parquet(*[f"{root}/{rel}" for rel in sorted(existing)])
         )
-        p = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + subdir)
-        if fs.exists(p):
-            fs.delete(p, True)
-    fs.delete(tmp, True)
+        result = target_slice.join(
+            updates.select(*pk), on=pk, how="left_anti"
+        ).unionByName(live)
+
+    tmp = root + ".__merge_tmp__"
+    (
+        result.hint("rebalance", *partition_by)
+        .write.mode("overwrite")
+        .partitionBy(*partition_by)
+        .parquet(tmp)
+    )
+    for rel in touched:
+        target, new = Path(f"{root}/{rel}"), Path(f"{tmp}/{rel}")
+        if rel in existing:
+            _move(fs, target, Path(f"{tmp}/_old/{rel}"))
+        if fs.exists(new):
+            _move(fs, new, target)
+    fs.delete(Path(tmp), True)
+
+
+def _move(fs, src, dst) -> None:
+    """Rename ``src`` to ``dst``, creating ``dst``'s parent; Hadoop's
+    rename reports failure by returning False, so raise on it."""
+    fs.mkdirs(dst.getParent())
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src.toString()} -> {dst.toString()} failed")
 
 
 def read_orc(spark: SparkSession, path: str, schema=None) -> DataFrame:

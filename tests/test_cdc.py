@@ -18,7 +18,6 @@ from hmpps_digital_prison_reporting_glue_poc_spark.operators.cdc import (
     first_event_per_key,
     map_events_to_target,
     merge_cdc,
-    apply_to_curated,
 )
 from hmpps_digital_prison_reporting_glue_poc_spark.sources import read_cdc_json
 from hmpps_digital_prison_reporting_glue_poc_spark.types import (
@@ -248,13 +247,6 @@ def test_first_and_latest_event_per_key(spark, tmp_path):
     }
     assert first == {1: "A", 2: "X"}
     assert last == {1: "B", 2: "X"}
-
-
-def test_curated_identity_and_transform(spark):
-    df = spark.range(3)
-    assert apply_to_curated(df).collect() == df.collect()
-    doubled = apply_to_curated(df, lambda d: d.withColumn("x", F.col("id") * 2))
-    assert [r.x for r in doubled.orderBy("id").collect()] == [0, 2, 4]
 
 
 def test_type_map_and_ddl_parser():

@@ -147,6 +147,20 @@ def test_landing_quarantine_path(spark, wiring, tmp_path):
     assert q.count() == 1 and "NOT JSON" in q.first()[0]
 
 
+def test_pipeline_quarantine_releases_its_cache(spark, wiring):
+    """The quarantine split caches the raw batch (SPARK-21610); run_pipeline
+    must release it, or every batch of a long-running stream leaks one."""
+    cfg, cat = wiring
+    with open(os.path.join(cfg.raw_path, "bad.json"), "a") as f:
+        f.write("THIS IS NOT JSON\n")
+    cfg.quarantine = True
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    run_pipeline(spark, cfg, cat)
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+    assert cat.read(spark, "offenders").count() == 2
+
+
 def test_pipeline_routes_multiple_tables(spark, tmp_path):
     """One event log carrying two source tables: each routes to its own
     structured target; untouched configured tables are not rewritten."""

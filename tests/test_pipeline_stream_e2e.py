@@ -41,7 +41,9 @@ TARGET_SCHEMA = with_admin_columns(
 )
 
 
-def _event(op, pos, oid, first, last):
+def _event(op, pos, oid, first, last, before=None):
+    """One envelope; ``before`` is the (first, last) pre-image a U or D
+    carries, by default the row itself."""
     row = {"OFFENDER_ID": oid, "LAST_NAME": last, "FIRST_NAME": first}
     out = {
         "table": "OMS_OWNER.OFFENDERS",
@@ -51,7 +53,9 @@ def _event(op, pos, oid, first, last):
         "pos": f"{pos:020d}",
     }
     if op in ("U", "D"):
-        out["before"] = row
+        out["before"] = row if before is None else {
+            "OFFENDER_ID": oid, "FIRST_NAME": before[0], "LAST_NAME": before[1]
+        }
     if op in ("I", "U"):
         out["after"] = row
     return out
@@ -90,19 +94,23 @@ DEFS_DDL = (
 )
 
 
-def _wire(spark, base: str) -> tuple[PipelineConfig, Catalog]:
+def _wire(
+    spark, base: str, files=BATCH_FILES, **options
+) -> tuple[PipelineConfig, Catalog]:
+    """Raw files (each an event list; a str entry is written verbatim as a
+    line), catalog and config; ``options`` set PipelineConfig flags."""
     raw = os.path.join(base, "raw")
     os.makedirs(raw)
     now = int(time.time())
-    for i, events in enumerate(BATCH_FILES):
+    for i, events in enumerate(files):
         fp = os.path.join(raw, f"batch_{i}.json")
         with open(fp, "w") as f:
             for e in events:
-                f.write(json.dumps(e) + "\n")
+                f.write((e if isinstance(e, str) else json.dumps(e)) + "\n")
         # Strictly increasing mtimes: FileStreamSource orders micro-batches
         # by file timestamp, and trail files arrive over time in production;
         # same-second writes would make the replay order nondeterministic.
-        os.utime(fp, (now - len(BATCH_FILES) + i, now - len(BATCH_FILES) + i))
+        os.utime(fp, (now - len(files) + i, now - len(files) + i))
     cat = Catalog()
     cat.register(TableSpec("gg_event_log", os.path.join(base, "log"),
                            partition_by=["part_date"]))
@@ -119,6 +127,7 @@ def _wire(spark, base: str) -> tuple[PipelineConfig, Catalog]:
         event_log_table="gg_event_log",
         row_schema=ROW_SCHEMA,
         tables={"offenders": ("offenders", "offenders_curated")},
+        **options,
     )
     return cfg, cat
 
@@ -193,3 +202,56 @@ def test_stream_pipeline_checkpoint_resume_is_incremental(spark, tmp_path):
     dom = _table_rows(spark, scat, "domain1_names",
                       ["offender_id", "full_name"])
     assert (4, "Newer Person") in dom
+
+
+# Hash-chain mode: a U applies only if its before image chains onto the
+# current row, a D whose before image is stale is rejected (the row
+# stays), and one truncated line must be quarantined, not crash a batch.
+# The chains cross micro-batch boundaries, so the stream folds against the
+# structured table while the batch folds all events at once.
+CHAIN_FILES = [
+    [
+        _event("I", 1, 1, "Pat", "Murphy"),
+        _event("I", 2, 2, "David", "Martin"),
+        _event("I", 3, 3, "Tmp", "Row"),
+    ],
+    [
+        _event("U", 4, 1, "Patrick", "Murphy", before=("Pat", "Murphy")),
+        _event("D", 5, 2, "Dave", "Martin", before=("Dave", "Martin")),
+        '{"table": "OMS_OWNER.OFFENDERS", "op_type": "U", "pos": "0000',
+    ],
+    [
+        _event("U", 6, 1, "Paddy", "Murphy", before=("Patrick", "Murphy")),
+        _event("D", 7, 3, "Tmp", "Row"),
+        _event("U", 8, 2, "Stale", "Martin", before=("Dave", "Martin")),
+    ],
+]
+
+
+def test_stream_pipeline_matches_batch_with_hash_chain_and_quarantine(
+    spark, tmp_path
+):
+    data_cols = ["offender_id", "first_name", "last_name"]
+    defs = spark.createDataFrame([DEFS_ROW], DEFS_DDL)
+    options = {"validate_hash_chain": True, "quarantine": True}
+
+    bcfg, bcat = _wire(spark, str(tmp_path / "batch"), CHAIN_FILES, **options)
+    run_pipeline(spark, bcfg, bcat, defs_df=defs, process_id=5)
+    scfg, scat = _wire(spark, str(tmp_path / "stream"), CHAIN_FILES, **options)
+    n_batches = run_pipeline_streaming(
+        spark, scfg, scat, checkpoint_dir=str(tmp_path / "ckpt"),
+        defs_df=defs, process_id=5, max_files_per_trigger=1,
+    )
+    assert n_batches == 3
+
+    expected = {(1, "Paddy", "Murphy"), (2, "David", "Martin")}
+    for cat in (bcat, scat):
+        for name in ("offenders", "offenders_curated"):
+            assert _table_rows(spark, cat, name, data_cols) == expected, name
+        assert _table_rows(
+            spark, cat, "domain1_names", ["offender_id", "full_name"]
+        ) == {(1, "Paddy Murphy"), (2, "David Martin")}
+        quarantined = spark.read.parquet(
+            cat.get("gg_event_log").path + "_quarantine"
+        ).collect()
+        assert [r[0] for r in quarantined] == [CHAIN_FILES[1][2]]

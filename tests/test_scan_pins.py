@@ -12,6 +12,12 @@ plan. A query whose rollup is materialized pins at 0 for the base table
 gate still works: removing the cut restores the N-consumer multi-scan
 final plan, which exceeds the pin.
 
+Blind spot: a query whose EVERY base scan moved into a ``materialize``
+producer job pins as ``{}`` (``revenue_lorenz_deciles`` and
+``uplift_deciles_click_purchase``, whose ``events`` scan runs in the
+producer). Producer plans are not walked, so the gate is vacuous for
+them: a new re-scan inside their producer would not fail it.
+
 Queries pinned above 1 scan are the triaged acceptance baseline:
 size-gated cuts (materialize_if_large) that deliberately stay inline at
 sf0.001, wrapper fixtures slicing one table into synthetic batches, and

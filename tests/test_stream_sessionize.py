@@ -127,6 +127,14 @@ def test_idle_timeout_evicts_and_restarts(spark, tmp_path):
             except Exception:
                 pass  # sink dir not yet created by the first commit
             _time.sleep(0.2)
+        # A timeout eviction can land in a cleanup batch after the one
+        # that committed the rows: wait for one more committed batch, so
+        # the restart sees the evicted state.
+        seen = (q.lastProgress or {}).get("batchId", -1)
+        while q.isActive and _time.time() < deadline:
+            if (q.lastProgress or {}).get("batchId", -1) > seen:
+                break
+            _time.sleep(0.2)
         q.stop()
         q.awaitTermination(60)
 
