@@ -13185,15 +13185,25 @@ def rank_dependence_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank_quintile_dependence,
     )
 
+    qty = F.col("l_quantity").cast("long")
+    price_cents = F.round(
+        F.col("l_extendedprice").cast("double") * 100, 0
+    ).cast("long")
+    # (l_orderkey, l_linenumber) can repeat in generated tables; with the
+    # two values appended the rank order is total ('#' sorts below the
+    # digits and '|', so on unique keys the order is unchanged).
     li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_quantity").cast("long").alias("qty"),
-        F.round(F.col("l_extendedprice").cast("double") * 100, 0)
-        .cast("long")
-        .alias("price_cents"),
+        qty.alias("qty"),
+        price_cents.alias("price_cents"),
         F.concat_ws(
-            "|",
-            F.col("l_orderkey").cast("string"),
-            F.col("l_linenumber").cast("string"),
+            "#",
+            F.concat_ws(
+                "|",
+                F.col("l_orderkey").cast("string"),
+                F.col("l_linenumber").cast("string"),
+            ),
+            qty.cast("string"),
+            price_cents.cast("string"),
         ).alias("rid"),
     )
     # Widths auto-selected (r8, verdict task 3): qty has ~50 distinct
@@ -13208,7 +13218,10 @@ WITH base AS (
   SELECT CAST(l_quantity AS BIGINT) AS x,
          CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS y,
          CAST(l_orderkey AS VARCHAR) || '|'
-           || CAST(l_linenumber AS VARCHAR) AS rid
+           || CAST(l_linenumber AS VARCHAR)
+           || '#' || CAST(CAST(l_quantity AS BIGINT) AS VARCHAR)
+           || '#' || CAST(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
+                          AS VARCHAR) AS rid
   FROM lineitem),
 ranked AS (
   SELECT CAST(ROW_NUMBER() OVER (ORDER BY x, rid) AS BIGINT) AS rx,

@@ -61,20 +61,32 @@ class Catalog:
 
     # -- IO ----------------------------------------------------------------
     def read(self, spark: SparkSession, name: str) -> DataFrame:
+        """A parquet table with a published schema is read with it: no
+        schema-inference job (Spark's ``load`` job that opens a footer),
+        and the columns carry the published types (partition columns
+        too, instead of types guessed from directory names). Without a
+        published schema, or in another format, Spark infers it."""
         spec = self.get(name)
         reader = spark.read.options(**spec.options)
         if spec.format == "csv":
             return reader.option("header", "true").csv(spec.path)
         if spec.format == "json":
             return reader.json(spec.path)
+        schema = self.published_schema(name)
+        if spec.format == "parquet" and schema is not None:
+            reader = reader.schema(schema)
         return reader.format(spec.format).load(spec.path)
 
     def write(self, df: DataFrame, name: str, mode: str = "overwrite") -> None:
+        """Write ``df`` as the table. An overwrite publishes ``df.schema``;
+        any other mode clears the published schema, since the files may
+        then hold more than one, and the next read infers."""
         spec = self.get(name)
         writer = df.write.format(spec.format).mode(mode).options(**spec.options)
         if spec.partition_by:
             writer = writer.partitionBy(*spec.partition_by)
         writer.save(spec.path)
+        spec.schema_json = df.schema.json() if mode == "overwrite" else None
 
     # -- schema publish (S9) ------------------------------------------------
     def publish_schema(self, name: str, schema) -> None:

@@ -31,7 +31,6 @@ from pyspark.sql import types as T
 from hmpps_digital_prison_reporting_glue_poc_spark.functions.cdc_functions import (
     add_event_hashes,
     add_part_date,
-    split_table_name,
 )
 
 # Merge-time process fields appended to the target schema
@@ -61,47 +60,52 @@ def map_events_to_target(
     ``after``. Dates/timestamps arrive as strings and are truncated-then-cast
     exactly like the reference (first 10 chars for dates, first 26 for
     timestamps, reference :309-327). Lineage columns per reference :352-361.
-    """
-    payload = F.when(F.col("op_type") == "D", F.col("before")).otherwise(
-        F.col("after")
-    )
-    schema_col, table_col = split_table_name(F.col("table"))
 
+    The projection is built as SQL expression strings and applied with one
+    ``selectExpr``: the same expressions as the Column API would build
+    (``split_table_name``'s split/lower, a case-insensitive field of the
+    payload), but one call into the JVM per table instead of one per
+    column function — on PySpark 4 each of those also records its call
+    site, and a 30-column target took ≈ 180 of them.
+    """
+    payload = "(CASE WHEN op_type = 'D' THEN `before` ELSE `after` END)"
+    parts = r"split(lower(`table`), '\\.')"
     admin_exprs = {
-        "admin_hash": F.col("after_hash").cast("string"),
-        "previous_hash": F.col("before_hash").cast("string"),
-        "admin_gg_pos": F.col("pos"),
-        "admin_gg_op_ts": F.substring(F.col("op_ts"), 1, 26).cast("timestamp"),
-        "admin_event_ts": F.current_timestamp(),
-        "event_type": F.col("op_type"),
-        "table": table_col,
-        "schema": schema_col,
+        "admin_hash": "CAST(after_hash AS STRING)",
+        "previous_hash": "CAST(before_hash AS STRING)",
+        "admin_gg_pos": "pos",
+        "admin_gg_op_ts": "CAST(substring(op_ts, 1, 26) AS TIMESTAMP)",
+        "admin_event_ts": "current_timestamp()",
+        "event_type": "op_type",
+        "table": f"{parts}[1]",
+        "schema": f"{parts}[0]",
     }
 
-    cols = []
+    exprs = []
     payload_fields = {
         f.name.lower() for f in events.schema["after"].dataType.fields
     }
     for field in target_schema.fields:
         name = field.name.lower()
         if name in admin_exprs:
-            cols.append(admin_exprs.pop(name).alias(name))
-            continue
-        if name not in payload_fields:
-            cols.append(F.lit(None).cast(field.dataType).alias(name))
-            continue
-        src = payload.getField(name)  # case-insensitive resolution
-        if isinstance(field.dataType, T.DateType):
-            value = F.substring(src.cast("string"), 1, 10).cast("date")
-        elif isinstance(field.dataType, T.TimestampType):
-            value = F.substring(src.cast("string"), 1, 26).cast("timestamp")
+            value = admin_exprs.pop(name)
+        elif name not in payload_fields:
+            value = f"CAST(NULL AS {field.dataType.simpleString()})"
         else:
-            value = src.cast(field.dataType)
-        cols.append(value.alias(name))
+            src = f"{payload}.`{name}`"  # case-insensitive resolution
+            if isinstance(field.dataType, T.DateType):
+                value = f"CAST(substring(CAST({src} AS STRING), 1, 10) AS DATE)"
+            elif isinstance(field.dataType, T.TimestampType):
+                value = (
+                    f"CAST(substring(CAST({src} AS STRING), 1, 26) AS TIMESTAMP)"
+                )
+            else:
+                value = f"CAST({src} AS {field.dataType.simpleString()})"
+        exprs.append(f"{value} AS `{name}`")
     # Remaining process/lineage fields not present in the target schema.
-    for name, expr in admin_exprs.items():
-        cols.append(expr.alias(name))
-    return events.select(*cols)
+    for name, value in admin_exprs.items():
+        exprs.append(f"{value} AS `{name}`")
+    return events.selectExpr(*exprs)
 
 
 def latest_event_per_key(

@@ -125,11 +125,10 @@ def run_domains(
         try:
             result = run_definition(spark, definition, catalog, process_id)
             if write and definition.target in catalog:
-                catalog.write(result, definition.target)
-                # S9: publish the result schema alongside the data (the
-                # reference pushes this to the Glue catalog,
+                # S9: the write publishes the result schema alongside the
+                # data (the reference pushes it to the Glue catalog,
                 # src/apply_to_domains.py:147-166).
-                catalog.publish_schema(definition.target, result.schema)
+                catalog.write(result, definition.target)
         except Exception as exc:  # noqa: BLE001 — quarantined below
             if on_error == "raise" or failures is None:
                 raise

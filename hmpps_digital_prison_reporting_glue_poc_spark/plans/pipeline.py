@@ -20,16 +20,21 @@ reference README.md:48-58):
   or the hash-chain fold) and ``sources.io.merge_write`` merges it into
   structured and then curated — only touched partitions are rewritten,
   never the whole table;
-- per-table work is derived from the event log with one distinct scan, and
-  everything downstream of it is per-table DataFrame lineage — no driver
-  collect of data rows (only the table-name list, which is metadata-scale).
+- a batch runs only the Spark jobs that move data. What the pipeline
+  needs to know about a batch rides a job that already runs, as an
+  ``Observation``: the touched table names ride the event-log append,
+  and each table's touched partition values ride its net change's
+  checkpoint job. Targets read with the schema the previous merge
+  published in the catalog, so no read runs a schema-inference job. No
+  data rows are collected anywhere.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -72,13 +77,18 @@ class PipelineConfig:
 def run_landing(
     spark: SparkSession, cfg: PipelineConfig, catalog: Catalog,
     raw: DataFrame | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, list[str]]:
     """Stage 1 (E1): raw CDC events -> hashed, date-partitioned event log.
     ``raw`` is one batch read with ``cdc_json_reader`` (a micro-batch on
     the stream); ``None`` reads ``cfg.raw_path``. With ``cfg.quarantine``
     malformed lines append to <event_log_path>_quarantine. Append-only —
     the event log is immutable history; partition pruning on part_date
-    serves the downstream incremental reads."""
+    serves the downstream incremental reads.
+
+    Returns the batch's event-log frame and the lower-cased qualified
+    table names it carries, observed on the append itself (no job of its
+    own). A row without a table name (a malformed line when quarantine is
+    off) names no table, so no stage applies it."""
     spec = catalog.get(cfg.event_log_table)
     if raw is None:
         raw = read_cdc_json(spark, cfg.raw_path, cfg.row_schema, cfg.quarantine)
@@ -86,42 +96,50 @@ def run_landing(
         raw, corrupt = split_corrupt(raw)
         corrupt.write.mode("append").parquet(spec.path + "_quarantine")
     log = ingest_events(raw)
-    write_partitioned_parquet(log, spec.path, ["part_date"], mode="append")
-    return log
+    seen = Observation()
+    write_partitioned_parquet(
+        log.observe(seen, F.collect_set(F.lower("table")).alias("tables")),
+        spec.path, ["part_date"], mode="append",
+    )
+    return log, sorted(seen.get["tables"])
+
+
+class Net(NamedTuple):
+    """One table's net change for a batch."""
+
+    frame: DataFrame         # target columns plus ``__is_delete``
+    schema: T.StructType     # the target columns' schema, as merged
+    partitions: list         # touched partition values (``merge_write``)
 
 
 def run_structured(
     spark: SparkSession, cfg: PipelineConfig, catalog: Catalog,
-    event_log: DataFrame | None = None,
-) -> dict[str, DataFrame]:
-    """Stage 2 (E2): event log -> per-table net change, merged into the
-    structured tables. Returns {touched logical table name: net frame}
-    (target columns plus ``__is_delete``); the names drive stage 4 ACTIVE
-    filtering, replacing the reference's hard-coded KINESIS_EVENTS_TABLES.
+    event_log: DataFrame, tables: list[str],
+) -> dict[str, Net]:
+    """Stage 2 (E2): the batch's event log -> per-table net change, merged
+    into the structured tables. ``tables`` are the qualified table names
+    ``run_landing`` observed. Returns {touched logical table name: Net};
+    the names drive stage 4 ACTIVE filtering, replacing the reference's
+    hard-coded KINESIS_EVENTS_TABLES.
 
     Each net is computed once, as an eager local checkpoint: structured
     and curated merge the same frame over a short plan, and the hash-chain
     fold, which reads the live rows of the touched keys from the target
     this merge replaces, is never re-run after the swap (it would fold
-    against the new table or miss its deleted files). ``run_pipeline``
-    releases the checkpoints."""
-    log = (
-        event_log
-        if event_log is not None
-        else catalog.read(spark, cfg.event_log_table)
-    )
-    tables = [
-        r[0] for r in log.select(F.lower("table")).distinct().collect()
-    ]  # metadata-scale collect (table names only)
-    nets: dict[str, DataFrame] = {}
+    against the new table or miss its deleted files). The checkpoint job
+    also observes the net's partition values for both merges (the
+    partition columns of the structured and the curated table), and the
+    merged schema is published, so the next batch reads the target
+    without inferring it. ``run_pipeline`` releases the checkpoints."""
+    nets: dict[str, Net] = {}
     for qualified in tables:
         name = format_table_name(qualified)
         if name not in cfg.tables:
             continue
-        target_name, _ = cfg.tables[name]
+        target_name, curated_name = cfg.tables[name]
         spec = catalog.get(target_name)
         target = catalog.read(spark, target_name)
-        events = log.filter(F.lower("table") == qualified)
+        events = event_log.filter(F.lower("table") == qualified)
         mapped = map_events_to_target(events, target.schema)
         if cfg.validate_hash_chain:
             net = _chain_fold(
@@ -129,33 +147,52 @@ def run_structured(
             ).withColumn("__is_delete", F.col("__action") == "D")
         else:
             net = cdc_upsert_frame(mapped, spec.pk)
-        net = net.select(*target.columns, "__is_delete").localCheckpoint(
-            eager=True
+        net = net.select(*target.columns, "__is_delete")
+        part_cols = list(dict.fromkeys(
+            spec.partition_by + catalog.get(curated_name).partition_by
+        ))
+        seen = Observation()
+        if part_cols:
+            net = net.observe(seen, F.collect_set(F.struct(*[
+                F.col(c).cast("string").alias(c) for c in part_cols
+            ])).alias("partitions"))
+        net = net.localCheckpoint(eager=True)
+        nets[name] = Net(
+            net,
+            T.StructType([f for f in net.schema if f.name != "__is_delete"]),
+            seen.get["partitions"] if part_cols else [],
         )
-        io.merge_write(
-            spark, net, spec.path, spec.pk, delete_col="__is_delete",
-            partition_by=spec.partition_by or None,
-        )
-        nets[name] = net
+        _merge(spark, catalog, target_name, spec.pk, nets[name])
     return nets
 
 
 def run_curated(
     spark: SparkSession, cfg: PipelineConfig, catalog: Catalog,
-    nets: dict[str, DataFrame],
+    nets: dict[str, Net],
 ) -> list[str]:
     """Stage 3 (E3 bridge): structured -> curated. Curated is the identity
     image of structured (reference src/apply_to_curated.py:153-161) and
     starts in step with it, so merging each table's net change from
-    ``run_structured`` keeps the two equal without copying the table."""
+    ``run_structured`` keeps the two equal without copying the table,
+    and the net's schema is curated's schema."""
     for name, net in nets.items():
         target_name, curated_name = cfg.tables[name]
-        spec = catalog.get(curated_name)
-        io.merge_write(
-            spark, net, spec.path, spec.pk or catalog.get(target_name).pk,
-            delete_col="__is_delete", partition_by=spec.partition_by or None,
-        )
+        pk = catalog.get(curated_name).pk or catalog.get(target_name).pk
+        _merge(spark, catalog, curated_name, pk, net)
     return list(nets)
+
+
+def _merge(
+    spark: SparkSession, catalog: Catalog, name: str, pk: list[str], net: Net
+) -> None:
+    """Merge one net change into catalog table ``name`` and publish the
+    schema it merged."""
+    spec = catalog.get(name)
+    io.merge_write(
+        spark, net.frame, spec.path, pk, delete_col="__is_delete",
+        partition_by=spec.partition_by or None, partitions=net.partitions,
+    )
+    catalog.publish_schema(name, net.schema)
 
 
 def run_pipeline(
@@ -170,10 +207,10 @@ def run_pipeline(
     checkpoints) is released before it returns."""
     if raw is None:
         raw = read_cdc_json(spark, cfg.raw_path, cfg.row_schema, cfg.quarantine)
-    nets: dict[str, DataFrame] = {}
+    nets: dict[str, Net] = {}
     try:
-        log = run_landing(spark, cfg, catalog, raw)
-        nets = run_structured(spark, cfg, catalog, event_log=log)
+        log, tables = run_landing(spark, cfg, catalog, raw)
+        nets = run_structured(spark, cfg, catalog, log, tables)
         run_curated(spark, cfg, catalog, nets)
         if defs_df is None or not nets:
             return {}
@@ -185,7 +222,7 @@ def run_pipeline(
     finally:
         raw.unpersist()
         for net in nets.values():  # a local checkpoint's plan is its RDD
-            net._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            net.frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def run_pipeline_streaming(

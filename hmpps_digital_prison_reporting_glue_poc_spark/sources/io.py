@@ -136,6 +136,7 @@ def merge_write(
     pk: list[str],
     delete_col: str | None = None,
     partition_by: list[str] | None = None,
+    partitions: list | None = None,
 ) -> None:
     """S7 rebuilt: incremental upsert sink.
 
@@ -158,6 +159,12 @@ def merge_write(
     should be removed rather than upserted. The partition columns must be
     stable per key (a row never migrates partitions between versions) —
     same invariant a Delta/Hudi partitioned upsert requires.
+
+    ``partitions``: the partition values the updates touch, when the
+    caller already has them — each a ``Row`` (or dict) from partition
+    column name to the value cast to string; other fields are ignored.
+    The pipeline observes them on the job that computes its net change.
+    ``None`` collects them from ``updates`` (a distinct: two small jobs).
     """
     if HAS_DELTA and DeltaTable is not None and DeltaTable.isDeltaTable(spark, path):
         cond = " AND ".join(f"t.{k} = u.{k}" for k in pk)
@@ -185,7 +192,9 @@ def merge_write(
         live = updates
 
     if partition_by:
-        _merge_write_partitioned(spark, updates, live, path, pk, partition_by, fs)
+        _merge_write_partitioned(
+            spark, updates, live, path, pk, partition_by, fs, partitions
+        )
         return
     exists = fs.exists(jpath)
     if exists:
@@ -219,14 +228,18 @@ def _merge_write_partitioned(
     pk: list[str],
     partition_by: list[str],
     fs,
+    partitions: list | None = None,
 ) -> None:
     """Partition-scoped parquet merge (the fallback's scale path).
 
-    1. Distinct partition values of the updates — metadata-scale collect
-       (one row per touched partition, same driver budget as a Delta
-       commit's file listing) — named as Spark's writer names partition
-       directories (``ExternalCatalogUtils.getPartitionPathString`` over
-       the value cast to string, so ``/``, ``:``, ``=`` escape and NULL is
+    1. The touched partition values: ``partitions`` when the caller
+       passes them (``run_structured`` observes them on its net's
+       checkpoint job), else a distinct collect of the updates' partition
+       columns — metadata-scale either way (one row per touched
+       partition, the same budget as a Delta commit's file listing).
+       Each is named as Spark's writer names partition directories
+       (``ExternalCatalogUtils.getPartitionPathString`` over the value
+       cast to string, so ``/``, ``:``, ``=`` escape and NULL is
        ``__HIVE_DEFAULT_PARTITION__``).
     2. Only the touched directories that exist are read, with the updates'
        schema (no schema-inference job, no whole-table listing; a column
@@ -251,13 +264,16 @@ def _merge_write_partitioned(
     jvm = spark._jvm
     Path = jvm.org.apache.hadoop.fs.Path
     catalog_utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    values = updates.select(*[F.col(c).cast("string") for c in partition_by])
+    if partitions is None:
+        partitions = updates.select(
+            *[F.col(c).cast("string").alias(c) for c in partition_by]
+        ).distinct().collect()
     touched = sorted({
         "/".join(
-            catalog_utils.getPartitionPathString(c, v)
-            for c, v in zip(partition_by, row)
+            catalog_utils.getPartitionPathString(c, row[c])
+            for c in partition_by
         )
-        for row in values.distinct().collect()
+        for row in partitions
     })
     if not touched:
         return

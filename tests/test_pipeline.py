@@ -141,8 +141,9 @@ def test_landing_quarantine_path(spark, wiring, tmp_path):
     with open(os.path.join(cfg.raw_path, "bad.json"), "a") as f:
         f.write("THIS IS NOT JSON\n")
     cfg.quarantine = True
-    log = run_landing(spark, cfg, cat)
+    log, tables = run_landing(spark, cfg, cat)
     assert log.count() == 5  # clean events only
+    assert tables == ["oms_owner.offenders"]
     q = spark.read.parquet(cat.get("gg_event_log").path + "_quarantine")
     assert q.count() == 1 and "NOT JSON" in q.first()[0]
 
@@ -159,6 +160,20 @@ def test_pipeline_quarantine_releases_its_cache(spark, wiring):
     run_pipeline(spark, cfg, cat)
     assert set(jsc.getPersistentRDDs().keySet()) <= before
     assert cat.read(spark, "offenders").count() == 2
+
+
+def test_pipeline_without_quarantine_skips_malformed_line(spark, wiring):
+    """With quarantine off, a malformed raw line reads as an all-null row:
+    it names no table, so it is not applied, and the good event is."""
+    cfg, cat = wiring
+    with open(os.path.join(cfg.raw_path, "batch.json"), "w") as f:
+        f.write(json.dumps(_event("I", 1, 1, "Pat", "Murphy")) + "\n")
+        f.write('{"table": "OMS_OWNER.OFFENDERS", "op_type": "I", "pos"\n')
+    assert cfg.quarantine is False
+    run_pipeline(spark, cfg, cat)
+    rows = cat.read(spark, "offenders").collect()
+    assert [(r.offender_id, r.first_name) for r in rows] == [(1, "Pat")]
+    assert cat.read(spark, "gg_event_log").count() == 2  # history keeps both
 
 
 def test_pipeline_routes_multiple_tables(spark, tmp_path):
@@ -196,8 +211,8 @@ def test_pipeline_routes_multiple_tables(spark, tmp_path):
         },
     )
     from hmpps_digital_prison_reporting_glue_poc_spark.plans.pipeline import run_structured
-    log = run_landing(spark, cfg, cat)
-    touched = run_structured(spark, cfg, cat, event_log=log)
+    log, tables = run_landing(spark, cfg, cat)
+    touched = run_structured(spark, cfg, cat, log, tables)
     assert sorted(touched) == ["offender_bookings", "offenders"]
     assert cat.read(spark, "offenders").count() == 2
     assert cat.read(spark, "offender_bookings").count() == 1
