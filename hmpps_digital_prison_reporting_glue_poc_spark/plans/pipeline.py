@@ -26,11 +26,17 @@ reference README.md:48-58):
   and each table's touched partition values ride its net change's
   checkpoint job. Targets read with the schema the previous merge
   published in the catalog, so no read runs a schema-inference job. No
-  data rows are collected anywhere.
+  data rows are collected anywhere;
+- a small batch is bound by driver time (planning, per-job fixed cost),
+  not by the executors, so its independent steps overlap in driver
+  threads (``plans.parallel.map_parallel``): the domain definitions load
+  while landing runs, each touched table runs structured then curated in
+  its own thread, and the active domain queries run side by side.
 """
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
 from typing import NamedTuple
 
@@ -49,7 +55,11 @@ from hmpps_digital_prison_reporting_glue_poc_spark.operators.cdc import (
     map_events_to_target,
 )
 from hmpps_digital_prison_reporting_glue_poc_spark.plans.domains import (
+    load_definitions,
     run_domains,
+)
+from hmpps_digital_prison_reporting_glue_poc_spark.plans.parallel import (
+    map_parallel,
 )
 from hmpps_digital_prison_reporting_glue_poc_spark.sources import io
 from hmpps_digital_prison_reporting_glue_poc_spark.sources.io import (
@@ -130,39 +140,44 @@ def run_structured(
     also observes the net's partition values for both merges (the
     partition columns of the structured and the curated table), and the
     merged schema is published, so the next batch reads the target
-    without inferring it. ``run_pipeline`` releases the checkpoints."""
+    without inferring it. ``run_pipeline`` releases the checkpoints this
+    returns; when a step fails, this releases the ones it made."""
     nets: dict[str, Net] = {}
-    for qualified in tables:
-        name = format_table_name(qualified)
-        if name not in cfg.tables:
-            continue
-        target_name, curated_name = cfg.tables[name]
-        spec = catalog.get(target_name)
-        target = catalog.read(spark, target_name)
-        events = event_log.filter(F.lower("table") == qualified)
-        mapped = map_events_to_target(events, target.schema)
-        if cfg.validate_hash_chain:
-            net = _chain_fold(
-                target, mapped, spec.pk, "admin_gg_pos", target.columns
-            ).withColumn("__is_delete", F.col("__action") == "D")
-        else:
-            net = cdc_upsert_frame(mapped, spec.pk)
-        net = net.select(*target.columns, "__is_delete")
-        part_cols = list(dict.fromkeys(
-            spec.partition_by + catalog.get(curated_name).partition_by
-        ))
-        seen = Observation()
-        if part_cols:
-            net = net.observe(seen, F.collect_set(F.struct(*[
-                F.col(c).cast("string").alias(c) for c in part_cols
-            ])).alias("partitions"))
-        net = net.localCheckpoint(eager=True)
-        nets[name] = Net(
-            net,
-            T.StructType([f for f in net.schema if f.name != "__is_delete"]),
-            seen.get["partitions"] if part_cols else [],
-        )
-        _merge(spark, catalog, target_name, spec.pk, nets[name])
+    try:
+        for qualified in tables:
+            name = format_table_name(qualified)
+            if name not in cfg.tables:
+                continue
+            target_name, curated_name = cfg.tables[name]
+            spec = catalog.get(target_name)
+            target = catalog.read(spark, target_name)
+            events = event_log.filter(F.lower("table") == qualified)
+            mapped = map_events_to_target(events, target.schema)
+            if cfg.validate_hash_chain:
+                net = _chain_fold(
+                    target, mapped, spec.pk, "admin_gg_pos", target.columns
+                ).withColumn("__is_delete", F.col("__action") == "D")
+            else:
+                net = cdc_upsert_frame(mapped, spec.pk)
+            net = net.select(*target.columns, "__is_delete")
+            part_cols = list(dict.fromkeys(
+                spec.partition_by + catalog.get(curated_name).partition_by
+            ))
+            seen = Observation()
+            if part_cols:
+                net = net.observe(seen, F.collect_set(F.struct(*[
+                    F.col(c).cast("string").alias(c) for c in part_cols
+                ])).alias("partitions"))
+            net = net.localCheckpoint(eager=True)
+            nets[name] = Net(
+                net,
+                T.StructType([f for f in net.schema if f.name != "__is_delete"]),
+                seen.get["partitions"] if part_cols else [],
+            )
+            _merge(spark, catalog, target_name, spec.pk, nets[name])
+    except BaseException:
+        _release(nets)
+        raise
     return nets
 
 
@@ -186,11 +201,13 @@ def _merge(
     spark: SparkSession, catalog: Catalog, name: str, pk: list[str], net: Net
 ) -> None:
     """Merge one net change into catalog table ``name`` and publish the
-    schema it merged."""
+    schema it merged. The target is read with the schema published before,
+    when there is one."""
     spec = catalog.get(name)
     io.merge_write(
         spark, net.frame, spec.path, pk, delete_col="__is_delete",
         partition_by=spec.partition_by or None, partitions=net.partitions,
+        schema=catalog.published_schema(name),
     )
     catalog.publish_schema(name, net.schema)
 
@@ -203,26 +220,51 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """All four stages over one batch of raw events (``raw``, or
     ``cfg.raw_path`` when None). Returns the materialised domain frames.
-    What it caches on the way (the quarantine split, the nets' local
-    checkpoints) is released before it returns."""
+
+    Steps that do not read each other's results overlap in driver threads
+    (``map_parallel``): the domain definitions are parsed while landing
+    runs; each touched table then runs its structured and its curated
+    merge in a thread of its own, with no barrier between the tables; and
+    once every table is merged, the active domains run in parallel. A
+    failure in one table's merges is re-raised after the other tables'
+    threads have finished. What the batch caches on the way (the
+    quarantine split, the nets' local checkpoints) is released before it
+    returns, on failure too."""
     if raw is None:
         raw = read_cdc_json(spark, cfg.raw_path, cfg.row_schema, cfg.quarantine)
     nets: dict[str, Net] = {}
+
+    def apply_table(qualified: list[str]) -> list[str]:
+        touched = run_structured(spark, cfg, catalog, log, qualified)
+        nets.update(touched)
+        return run_curated(spark, cfg, catalog, touched)
+
     try:
-        log, tables = run_landing(spark, cfg, catalog, raw)
-        nets = run_structured(spark, cfg, catalog, log, tables)
-        run_curated(spark, cfg, catalog, nets)
-        if defs_df is None or not nets:
+        steps = [lambda: run_landing(spark, cfg, catalog, raw)]
+        if defs_df is not None:
+            steps.append(lambda: load_definitions(defs_df))
+        (log, tables), *definitions = map_parallel(spark, operator.call, steps)
+        # One thread per target: names that differ only in their schema
+        # owner merge into the same table, so they share a thread.
+        by_target: dict[str, list[str]] = {}
+        for qualified in tables:
+            by_target.setdefault(format_table_name(qualified), []).append(qualified)
+        applied = map_parallel(spark, apply_table, list(by_target.values()))
+        curated_touched = [cfg.tables[t][1] for names in applied for t in names]
+        if defs_df is None or not curated_touched:
             return {}
-        curated_touched = [cfg.tables[t][1] for t in nets]
         return run_domains(
-            spark, defs_df, curated_touched, catalog,
+            spark, definitions[0], curated_touched, catalog,
             process_id=process_id, write=True,
         )
     finally:
         raw.unpersist()
-        for net in nets.values():  # a local checkpoint's plan is its RDD
-            net.frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        _release(nets)
+
+
+def _release(nets: dict[str, Net]) -> None:
+    for net in nets.values():  # a local checkpoint's plan is its RDD
+        net.frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def run_pipeline_streaming(

@@ -137,6 +137,7 @@ def merge_write(
     delete_col: str | None = None,
     partition_by: list[str] | None = None,
     partitions: list | None = None,
+    schema: T.StructType | None = None,
 ) -> None:
     """S7 rebuilt: incremental upsert sink.
 
@@ -165,6 +166,12 @@ def merge_write(
     column name to the value cast to string; other fields are ignored.
     The pipeline observes them on the job that computes its net change.
     ``None`` collects them from ``updates`` (a distinct: two small jobs).
+
+    ``schema``: the target's schema, when the caller knows it (the
+    catalog's published schema). The unpartitioned fallback then reads
+    the target with it and runs no schema-inference job; ``None`` infers
+    it from the files. The partitioned fallback reads the touched
+    partitions with the updates' schema either way.
     """
     if HAS_DELTA and DeltaTable is not None and DeltaTable.isDeltaTable(spark, path):
         cond = " AND ".join(f"t.{k} = u.{k}" for k in pk)
@@ -198,7 +205,8 @@ def merge_write(
         return
     exists = fs.exists(jpath)
     if exists:
-        target = spark.read.parquet(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        target = reader.parquet(path)
         untouched = target.join(updates.select(*pk).distinct(), on=pk, how="left_anti")
         # Schema evolution (reference S8: Delta mergeSchema on domain
         # writes, src/apply_to_domains.py:223-224): new columns on either

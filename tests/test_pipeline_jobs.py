@@ -8,7 +8,11 @@ pipeline has merged or written uses the schema the catalog published, so
 no read runs a schema-inference job. Jobs are counted with a SparkContext
 job tag, which every job started from the calling thread carries
 (schema inference and AQE stage jobs included), and Spark's status
-tracker."""
+tracker. The pipeline runs independent steps in driver threads; those
+jobs carry the tag only when each thread inherits the caller's local
+properties, so the budget test also checks that the count covers every
+job of the batch's SQL executions, and that none of those executions
+nests under another."""
 
 import json
 import os
@@ -24,6 +28,7 @@ from hmpps_digital_prison_reporting_glue_poc_spark.plans.pipeline import (
     PipelineConfig,
     run_pipeline,
 )
+from hmpps_digital_prison_reporting_glue_poc_spark.sources import io
 
 ROW_SCHEMA = T.StructType([
     T.StructField("OFFENDER_ID", T.LongType()),
@@ -48,6 +53,9 @@ DOMAINS = {
 # queries' own jobs (2 + 3). Before the Observations and the published
 # schemas the same batch ran 40.
 CHANGE_BATCH_JOB_BUDGET = 24
+# At least one write job per merge (4) and per domain (2): a count below
+# this misses the jobs of the pipeline's worker threads.
+CHANGE_BATCH_JOB_FLOOR = 6
 
 
 def run_counting_jobs(spark, fn):
@@ -69,6 +77,31 @@ def run_counting_jobs(spark, fn):
         # session the status store may already have dropped it.
         jobs.append((job_id, [s.name for s in stages if s is not None]))
     return out, jobs
+
+
+def _scala_list(seq):
+    it, out = seq.iterator(), []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def last_execution_id(spark):
+    store = spark._jsparkSession.sharedState().statusStore()
+    total = store.executionsCount()
+    return -1 if total == 0 else store.executionsList().last().executionId()
+
+
+def executions_after(spark, after):
+    """[(execution id, root execution id, [job ids])] of the SQL executions
+    with ids above ``after`` (the last 200 the SQL status store keeps)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    total = store.executionsCount()
+    return [
+        (e.executionId(), e.rootExecutionId(), sorted(_scala_list(e.jobs().keys())))
+        for e in _scala_list(store.executionsList(max(0, total - 200), 200))
+        if e.executionId() > after
+    ]
 
 
 def inference_jobs(jobs):
@@ -148,11 +181,19 @@ def test_change_batch_job_budget(spark, two_tables):
     ]
     for events in ([initial], [changes[:1]], [changes]):
         _write_batch(cfg.raw_path, events[0], malformed=True)
+        before = last_execution_id(spark)
         _, jobs = run_counting_jobs(
             spark, lambda: run_pipeline(spark, cfg, cat, defs_df=defs,
                                         process_id=1))
     assert inference_jobs(jobs) == []
-    assert len(jobs) <= CHANGE_BATCH_JOB_BUDGET, jobs
+    assert CHANGE_BATCH_JOB_FLOOR <= len(jobs) <= CHANGE_BATCH_JOB_BUDGET, jobs
+    # The count covers every job the batch's SQL executions ran, and each
+    # execution is its own root: the test thread runs none, so one nested
+    # under a root means a worker thread saw a sibling's execution id.
+    executions = executions_after(spark, before)
+    assert executions
+    assert {j for _, _, ids in executions for j in ids} <= {j for j, _ in jobs}
+    assert [(e, root) for e, root, _ in executions if root != e] == []
     names = {r.offender_id: r.last_name
              for r in cat.read(spark, "offenders").collect()}
     assert names == {0: "n0", 1: "renamed", 3: "n3", 4: "n4", 5: "n5", 7: "n7"}
@@ -191,6 +232,64 @@ def test_empty_raw_batch_returns(spark, two_tables, quarantine):
     assert out == {}
     assert cat.read(spark, "offenders_structured").count() == 0
     assert not os.path.exists(cat.get("offenders").path)
+
+
+def _table_rows(spark, cat, name):
+    return sorted(tuple(r) for r in cat.read(spark, name).collect())
+
+
+def test_failed_table_merge_raises_after_the_other_table(spark, two_tables, monkeypatch):
+    """One table's structured merge fails at execution (a ``raise_error``
+    image). run_pipeline raises that error only after the other table's
+    thread has merged both its tables; the batch leaves no cached net, no
+    worker thread, and every target whole: the failed table's old rows,
+    the other table's new ones. The failing table is the first of the
+    batch, so an early re-raise would not wait on the other."""
+    cfg, cat, defs = two_tables
+    initial = [_event(t, "I", 10 * i + j, i, 100 + i, f"n{i}")
+               for i in range(6) for j, t in enumerate(TABLES)]
+    _write_batch(cfg.raw_path, initial)
+    run_pipeline(spark, cfg, cat, defs_df=defs, process_id=1)
+    old = {t: _table_rows(spark, cat, t)
+           for t in ("offender_bookings_structured", "offender_bookings")}
+
+    merge_write, failed = io.merge_write, threading.Event()
+    failing = cat.get("offender_bookings_structured").path
+    last_merge = cat.get("offenders").path
+
+    def patched(spark_, updates, path, *args, **kwargs):
+        if path == failing:
+            updates = updates.withColumn(
+                "last_name",
+                F.raise_error(F.lit("injected merge failure")).cast("string"),
+            )
+            try:
+                return merge_write(spark_, updates, path, *args, **kwargs)
+            finally:
+                failed.set()
+        if path == last_merge:  # the other table's last merge runs after
+            assert failed.wait(120)
+        return merge_write(spark_, updates, path, *args, **kwargs)
+
+    monkeypatch.setattr(io, "merge_write", patched)
+    _write_batch(cfg.raw_path, [
+        _event("offender_bookings", "U", 100, 1, 101, "rebooked"),
+        _event("offenders", "U", 101, 2, 102, "renamed"),
+        _event("offenders", "I", 102, 7, 107, "n7"),
+    ])
+    jsc = spark.sparkContext._jsc
+    cached, threads = set(jsc.getPersistentRDDs().keySet()), set(threading.enumerate())
+    with pytest.raises(Exception, match="injected merge failure"):
+        run_pipeline(spark, cfg, cat, defs_df=defs, process_id=1)
+    assert set(threading.enumerate()) <= threads
+    assert set(jsc.getPersistentRDDs().keySet()) <= cached
+
+    monkeypatch.undo()
+    assert {t: _table_rows(spark, cat, t) for t in old} == old
+    for name in ("offenders_structured", "offenders"):
+        rows = {r.offender_id: r.last_name for r in cat.read(spark, name).collect()}
+        assert rows == {0: "n0", 1: "n1", 2: "renamed", 3: "n3", 4: "n4",
+                        5: "n5", 7: "n7"}
 
 
 @pytest.fixture()
@@ -244,3 +343,31 @@ def test_write_publishes_the_new_schema(spark, tmp_path):
     cat.write(spark.range(1).withColumn("score", F.lit(2.5)), "w", mode="append")
     assert cat.published_schema("w") is None  # files may hold several now
     assert cat.read(spark, "w").count() == 4
+
+
+def test_unpartitioned_merge_reads_with_the_published_schema(spark, tmp_path):
+    """merge_write without partition_by reads the whole target: given the
+    target's schema it runs no schema-inference job (``parquet at``, the
+    only job that reads footers before the merge's own); without one it
+    still infers."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(i, f"v{i}") for i in range(5)], "id int, v string") \
+        .write.parquet(path)
+    schema = T.StructType([T.StructField("id", T.IntegerType()),
+                           T.StructField("v", T.StringType())])
+    updates = spark.createDataFrame([(1, "x", False), (2, "y", True)],
+                                    "id int, v string, d boolean")
+
+    def merge(schema):
+        return run_counting_jobs(spark, lambda: io.merge_write(
+            spark, updates, path, ["id"], delete_col="d", schema=schema))[1]
+
+    def reads(jobs):
+        return [j for j in jobs if j[1][:1] and j[1][0].startswith("parquet at")]
+
+    inferred, jobs = merge(None), merge(schema)
+    assert len(reads(inferred)) == 1 and reads(jobs) == []
+    assert len(jobs) == len(inferred) - 1
+    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == [
+        (0, "v0"), (1, "x"), (3, "v3"), (4, "v4")
+    ]
